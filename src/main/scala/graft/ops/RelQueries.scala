@@ -287,9 +287,10 @@ object RelQueries {
     * coordinates are integers; cents snap before the aggregate. */
   def j18GridJoin(s: SparkSession, dir: String): DataFrame = {
     val pts = table(s, dir, "lineitem")
-      .groupBy((col("l_orderkey") % 10000).as("cell_id"))
+      .groupBy(Grid.cellOf(col("l_orderkey")).as("cell_id"))
       .agg(max(col("l_quantity").cast("double")).as("q"))
-      .select((col("cell_id") % 100).as("x"), expr("cell_id div 100").as("y"),
+      .select(Grid.col(col("cell_id")).as("x"),
+        Grid.row(col("cell_id")).as("y"),
         (col("q").cast("decimal(18,2)") * 100).cast("long").as("cents"))
       .withColumn("ptx", expr("x div 16")).withColumn("pty", expr("y div 16"))
     val rects = table(s, dir, "nation")
@@ -1534,16 +1535,15 @@ object RelQueries {
     Seq(zroot, rroot).foreach(p =>
       fs.delete(new org.apache.hadoop.fs.Path(p), true))
     val cells = table(s, dir, "lineitem")
-      .groupBy((col("l_orderkey") % 10000).as("cell_id"))
+      .groupBy(Grid.cellOf(col("l_orderkey")).as("cell_id"))
       .agg(sum((col("l_quantity").cast(dec) * 100).cast("long"))
         .cast("long").as("cents"))
-      .select(col("cell_id"), col("cents"),
-        expr("cell_id div 100").as("r"), (col("cell_id") % 100).as("c"))
+      .select(Seq(col("cell_id"), col("cents")) ++ Grid.rc(col("cell_id")): _*)
     val zv = SnapshotTable.commitPartitioned(
       cells.withColumn("zb", ZOrder.zBlock(col("r"), col("c"), 7, 10)),
       zroot, 0L, "zb")
     val rv = SnapshotTable.commitPartitioned(
-      cells.withColumn("rb", expr("(r * 16) div 100")), rroot, 0L, "rb")
+      cells.withColumn("rb", Grid.div(col("r") * 16, Grid.W)), rroot, 0L, "rb")
     val zm = SnapshotTable.manifestAt(s, zroot, zv)
     val rm = SnapshotTable.manifestAt(s, rroot, rv)
     require(zm.entries.length == rm.entries.length,

@@ -3,13 +3,13 @@ package graft.ops
 import graft._
 import graft.classify.Classify
 import graft.overlay.WeightedOverlay
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Reference-native capability queries over the driver fixtures.
   *
   * Pseudo-rasters (FIXTURES.md §B): lineitem rows become cells —
-  * cell_id = l_orderkey % 10000, three "layers" from l_quantity /
+  * cell_id = [[Grid.cellOf]](l_orderkey), three "layers" from l_quantity /
   * l_extendedprice / l_discount. A cell's layer value is max() over its
   * rows (order-independent, exact), so every declared query is
   * deterministic and DuckDB-oracle-checkable.
@@ -32,7 +32,7 @@ object WroQueries {
     val aggs = layers.map { case (name, src, _) =>
       max(col(src).cast("double")).as(name) }
     table(spark, dir, "lineitem")
-      .groupBy((col("l_orderkey") % 10000).as("cell_id"))
+      .groupBy(Grid.cellOf(col("l_orderkey")).as("cell_id"))
       .agg(aggs.head, aggs.tail: _*)
   }
 
@@ -103,7 +103,7 @@ object WroQueries {
     * table) all land on cell 0. The 100× question for the flagship:
     * real rasters have empty-ocean/dense-city distributions. */
   private[ops] def skewedObs(spark: SparkSession, dir: String): DataFrame = {
-    val hot = when(col("l_orderkey") % 4 === 0, col("l_orderkey") % 10000)
+    val hot = when(col("l_orderkey") % 4 === 0, Grid.cellOf(col("l_orderkey")))
       .otherwise(lit(0L))
     val kv = layers.flatMap { case (name, src, _) =>
       Seq(lit(name), col(src).cast("double")) }
@@ -228,13 +228,6 @@ object WroQueries {
     obsManyMappers.join(cellMax.hint("merge"), Seq("cell_id", "layer"))
   }
 
-  /** Forwarder to [[graft.withConfs]] (moved to the package object so the
-    * llm closure loop can share it); see that scaladoc for the
-    * must-materialize-inside contract. */
-  private[ops] def withConfs[T](spark: SparkSession,
-                                confs: Map[String, String])(body: => T): T =
-    graft.withConfs(spark, confs)(body)
-
   /** J13 under ADAPTIVE skew handling — the same planted-skew overlay as
     * [[overlaySkewed]] with the manual salt DISABLED: the hot cell is
     * left in one shuffle partition and Spark's OptimizeSkewedJoin (what
@@ -284,13 +277,13 @@ object WroQueries {
       .agg(count(lit(1)).as("n"))
   }
 
-  /** The pseudo-raster as a 2-D grid: cell_id 0..9999 unfolds to a
-    * 100×100 raster (row = cell_id div 100, col = cell_id % 100). The
-    * grid is SPARSE — a (row, col) with no fact rows is NoData, and the
-    * raster-algebra queries below treat absence as NoData the way the
-    * service kernel does (pyt:597 NoData semantics): focal/zonal
-    * statistics aggregate over present cells only. */
-  private val GridW = 100L
+  /** The quantity layer on the [[Grid]] as exact BIGINT cents (r, c,
+    * cents) — the money policy, so sums over it are exact under any
+    * aggregation order. */
+  private def centsGrid(spark: SparkSession, dir: String): DataFrame =
+    perCell(spark, dir).select(Grid.rc(col("cell_id")) :+
+      (col("quantity").cast("decimal(18,2)") * 100).cast("long")
+        .as("cents"): _*)
 
   /** GIS1 — FOCAL statistics (Esri Focal Statistics, 3×3 rectangle
     * neighborhood): per grid cell, the sum and count of the quantity
@@ -299,15 +292,13 @@ object WroQueries {
     * 9× row inflation of the BOUNDED ≤10k-cell raster — never of the
     * fact table), then one hash aggregate with map-side partial combine
     * folds contributions per target cell. At 100 TB the raster domain,
-    * not the fact table, bounds the focal exchange; a tiled layout
-    * (partition by tile, overlap = 1-cell halo) keeps the same plan
-    * shuffle-free per tile. Values snap to BIGINT cents before the sum
-    * (the money policy), so the focal sum is exact under any
+    * not the fact table, bounds the focal exchange; making it
+    * shuffle-free per tile needs the tiled 1-cell-halo layout, ROADMAP
+    * item 4's later step (not built). Values snap to BIGINT cents before
+    * the sum (the money policy), so the focal sum is exact under any
     * aggregation order. */
   def focalStats(spark: SparkSession, dir: String): DataFrame =
-    focalFrom(perCell(spark, dir)
-      .select(expr("cell_id div 100").as("r"), (col("cell_id") % GridW).as("c"),
-        (col("quantity").cast("decimal(18,2)") * 100).cast("long").as("cents")))
+    focalFrom(centsGrid(spark, dir))
 
   /** Focal core over a sparse grid (r, c, cents), exposed for the
     * hand-computed neighborhood spec. */
@@ -317,7 +308,7 @@ object WroQueries {
       .select((col("r") + col("dr")).as("r"), col("c"), col("cents"),
         explode(off).as("dc"))
       .select(col("r"), (col("c") + col("dc")).as("c"), col("cents"))
-      .filter(col("r").between(0, GridW - 1) && col("c").between(0, GridW - 1))
+      .filter(Grid.inGrid)
       .groupBy("r", "c")
       .agg(sum("cents").as("focal_sum"), count(lit(1)).as("n_nbr"))
   }
@@ -359,16 +350,16 @@ object WroQueries {
     * everything first). NoData (absent) input cells stay absent — exactly
     * NEAREST's no-interpolation contract. */
   def resampleNearest(spark: SparkSession, dir: String): DataFrame = {
-    val keep = expr("((l_orderkey % 10000) div 100) % 4 = 2") &&
-      expr("((l_orderkey % 10000) % 100) % 4 = 2")
+    val cell = Grid.cellOf(col("l_orderkey"))
+    val keep = Grid.row(cell) % 4 === 2 && Grid.col(cell) % 4 === 2
     val aggs = layers.map { case (name, src, _) =>
       max(col(src).cast("double")).as(name) }
     val pc = table(spark, dir, "lineitem").filter(keep)
-      .groupBy((col("l_orderkey") % 10000).as("cell_id"))
+      .groupBy(cell.as("cell_id"))
       .agg(aggs.head, aggs.tail: _*)
     cellsFrom(pc).select(col("layer"),
-      expr("(cell_id div 100) div 4").as("out_r"),
-      expr("(cell_id % 100) div 4").as("out_c"),
+      Grid.div(Grid.row(col("cell_id")), 4).as("out_r"),
+      Grid.div(Grid.col(col("cell_id")), 4).as("out_c"),
       (col("value").cast("decimal(18,4)") * 10000).cast("long").as("v4"))
   }
 
@@ -393,21 +384,16 @@ object WroQueries {
     * relative offset (−dr,−dc) from its target weighs
     * wx = −dc·(2−|dr|), wy = −dr·(2−|dc|) — then ONE map-side-combined
     * hash aggregate folds contributions. The exchange is bounded by the
-    * ≤10k-cell raster domain, never the fact table; at 100 TB a tiled
-    * layout with a 1-cell halo keeps the identical plan shuffle-free
-    * per tile. */
+    * ≤10k-cell raster domain, never the fact table; per-tile
+    * shuffle-freedom needs the tiled 1-cell-halo layout, ROADMAP item
+    * 4's later step (not built). */
   def slope(spark: SparkSession, dir: String): DataFrame = {
-    val offs = for { dr <- -1L to 1L; dc <- -1L to 1L }
-      yield (dr, dc, -dc * (2 - math.abs(dr)), -dr * (2 - math.abs(dc)))
-    perCell(spark, dir)
-      .select(expr("cell_id div 100").as("r"), (col("cell_id") % GridW).as("c"),
-        (col("quantity").cast("decimal(18,2)") * 100).cast("long").as("cents"))
-      .select(col("r"), col("c"), col("cents"),
-        explode(typedLit(offs)).as("o"))
-      .select((col("r") + col("o._1")).as("r"), (col("c") + col("o._2")).as("c"),
+    val offs = Grid.offs3x3.map { case (dr, dc) =>
+      (dr, dc, -dc * (2 - math.abs(dr)), -dr * (2 - math.abs(dc))) }
+    Grid.fanOut(centsGrid(spark, dir), offs, col("cents"))(
         (col("cents") * col("o._3")).as("xc"),
         (col("cents") * col("o._4")).as("yc"))
-      .filter(col("r").between(0, GridW - 1) && col("c").between(0, GridW - 1))
+      .filter(Grid.inGrid)
       .groupBy("r", "c")
       .agg(sum("xc").as("gx"), sum("yc").as("gy"), count(lit(1)).as("n"))
       .filter(col("n") === 9)
@@ -490,35 +476,14 @@ object WroQueries {
     * Shape: the cached cell grid C fans out codes to its 8 neighbors
     * (raster-domain bounded), joins back to C for the center
     * elevation, and one min(struct(−key, code)) aggregate picks the
-    * receiver — argmax as a partially-aggregable min, no window. */
-  /** (dr, dc) = target − source; code/weight are the TARGET's view of
-    * the source (its neighbor at (−dr, −dc)). Shared with the oracle's
-    * generated VALUES. */
-  private val d8Offs: Seq[(Long, Long, Long, Long)] = for {
-    dr <- -1L to 1L; dc <- -1L to 1L; if dr != 0 || dc != 0
-  } yield {
-    val (nr, nc) = (-dr, -dc)
-    val code = (nr, nc) match {
-      case (0L, 1L) => 1L; case (1L, 1L) => 2L; case (1L, 0L) => 4L
-      case (1L, -1L) => 8L; case (0L, -1L) => 16L; case (-1L, -1L) => 32L
-      case (-1L, 0L) => 64L; case (-1L, 1L) => 128L
-      case _ => sys.error("unreachable")
-    }
-    (dr, dc, code, if (nr == 0L || nc == 0L) 7L else 5L)
-  }
-
+    * receiver — argmax as a partially-aggregable min, no window. The
+    * code table is [[Grid.d8Offs]]. */
   def flowDirection(spark: SparkSession, dir: String): DataFrame = {
-    val cells = perCell(spark, dir)
-      .select(expr("cell_id div 100").as("r"), (col("cell_id") % GridW).as("c"),
-        (col("quantity").cast("decimal(18,2)") * 100).cast("long").as("cents"))
-      .cache()
-    val offs = d8Offs
-    val nbr = cells.select(col("r"), col("c"), col("cents"),
-        explode(typedLit(offs)).as("o"))
-      .select((col("r") + col("o._1")).as("r"), (col("c") + col("o._2")).as("c"),
+    val cells = centsGrid(spark, dir).cache()
+    val nbr = Grid.fanOut(cells, Grid.d8Offs, col("cents"))(
         col("cents").as("nb_cents"), col("o._3").as("code"),
         col("o._4").as("w"))
-      .filter(col("r").between(0, GridW - 1) && col("c").between(0, GridW - 1))
+      .filter(Grid.inGrid)
     nbr.join(cells.withColumnRenamed("cents", "own"), Seq("r", "c"))
       .select(col("r"), col("c"), col("code"),
         ((col("own") - col("nb_cents")) * col("w")).as("key"))
@@ -527,6 +492,18 @@ object WroQueries {
            min(struct((-col("key")).as("nk"), col("code"))).as("b"))
       .filter(col("n") === 8)
       .select(col("r"), col("c"), col("b.code").as("d8"))
+  }
+
+  /** The D8 flow edges u → v between packed cells (GIS9, GIS14, GIS28):
+    * each complete-neighborhood cell points at the neighbor its
+    * [[flowDirection]] code names. `extra` columns over the code `d8`
+    * ride along. */
+  private def d8Edges(spark: SparkSession, dir: String, extra: Column*)
+      : DataFrame = {
+    val (dr, dc) = Grid.d8Step(col("d8"))
+    flowDirection(spark, dir).select(Seq(
+      Grid.pack(col("r"), col("c")).as("u"),
+      Grid.pack(col("r") + dr, col("c") + dc).as("v")) ++ extra: _*)
   }
 
   /** GIS9 — FLOW ACCUMULATION over the D8 pointers (the second half of
@@ -539,31 +516,22 @@ object WroQueries {
     * count = count(DISTINCT origin) per receiving cell — DISTINCT, not
     * count(*), because the pit-pair 2-cycles [[flowDirection]]'s
     * least-bad-neighbor rule admits would otherwise count an origin
-    * once per lap (cells encode as r·100+c, exact on the 100-wide
-    * grid). Boundary cells have no D8 code and simply terminate paths.
+    * once per lap (cells encode as [[Grid.pack]]ed keys). Boundary
+    * cells have no D8 code and simply terminate paths.
     * At 100 TB the edge table is raster-domain bounded and
     * checkpointed once; each round is one partition-local join when
     * both sides hash on the cell key. */
   def flowAccumulation(spark: SparkSession, dir: String, k: Int = 10)
       : DataFrame = {
-    val code2dr = expr("""CASE d8 WHEN 1 THEN 0 WHEN 2 THEN 1 WHEN 4 THEN 1
-      WHEN 8 THEN 1 WHEN 16 THEN 0 WHEN 32 THEN -1 WHEN 64 THEN -1
-      ELSE -1 END""")
-    val code2dc = expr("""CASE d8 WHEN 1 THEN 1 WHEN 2 THEN 1 WHEN 4 THEN 0
-      WHEN 8 THEN -1 WHEN 16 THEN -1 WHEN 32 THEN -1 WHEN 64 THEN 0
-      ELSE 1 END""")
-    val edges = flowDirection(spark, dir)
-      .select((col("r") * 100 + col("c")).as("u"),
-        ((col("r") + code2dr) * 100 + (col("c") + code2dc)).as("v"))
-      .localCheckpoint()
+    val edges = d8Edges(spark, dir).localCheckpoint()
     val step = edges.select(col("u").as("su"), col("v").as("sv"))
     var cur = edges
     var all = edges
     // loop under relaxConfs: every per-round frame is raster-domain
-    // bounded (≤GridW² rows), so the k−1 extension checkpoints run as
+    // bounded (≤Grid.Cells rows), so the k−1 extension checkpoints run as
     // k−1 single jobs at domain-sized partitions instead of paying
     // AQE's per-stage job submission at the session's data-scale
-    // partition count (the costDistanceFrom discipline applied to the
+    // partition count (the chamferRelax discipline applied to the
     // one D8 loop that still paid it). The edges checkpoint above
     // stays OUTSIDE — its plan aggregates the fact table at data
     // scale. The final countDistinct below is lazy (materializes after
@@ -579,8 +547,7 @@ object WroQueries {
     }
     all.groupBy("v")
       .agg(countDistinct(col("u")).as("n_upstream"))
-      .select(expr("v div 100").as("r"), (col("v") % 100).as("c"),
-        col("n_upstream"))
+      .select(Grid.rc(col("v")) :+ col("n_upstream"): _*)
   }
 
   /** The classified raster shared by GIS10/GIS11: each present cell's
@@ -593,10 +560,10 @@ object WroQueries {
     val pc = perCell(spark, dir).cache()
     val stats = pc.agg(min("quantity").as("mn"), max("quantity").as("mx"))
     pc.crossJoin(broadcast(stats))
-      .select(expr("cell_id div 100").as("r"), (col("cell_id") % GridW).as("c"),
+      .select(Grid.rc(col("cell_id")) :+
         least(floor((col("quantity") - col("mn")) /
                     ((col("mx") - col("mn")) / lit(5.0))), lit(4))
-          .cast("int").as("cls"))
+          .cast("int").as("cls"): _*)
   }
 
   /** GIS10 — MAJORITY filter (Esri Majority Filter, the classed-raster
@@ -619,14 +586,10 @@ object WroQueries {
 
   /** Majority-filter core over a classed sparse grid (r, c, cls),
     * exposed for the hand-computed neighborhood spec. */
-  private[ops] def majorityFrom(classed: DataFrame): DataFrame = {
-    val offs = for { dr <- -1L to 1L; dc <- -1L to 1L }
-      yield (dr, dc, if (dr == 0L && dc == 0L) 1 else 0)
-    classed
-      .select(col("r"), col("c"), col("cls"), explode(typedLit(offs)).as("o"))
-      .select((col("r") + col("o._1")).as("r"), (col("c") + col("o._2")).as("c"),
+  private[ops] def majorityFrom(classed: DataFrame): DataFrame =
+    Grid.fanOut(classed, selfTagged, col("cls"))(
         col("cls"), col("o._3").as("self"))
-      .filter(col("r").between(0, GridW - 1) && col("c").between(0, GridW - 1))
+      .filter(Grid.inGrid)
       .groupBy("r", "c", "cls")
       .agg(sum(lit(1) - col("self")).as("nbr_n"), max("self").as("has_self"))
       .groupBy("r", "c")
@@ -640,7 +603,10 @@ object WroQueries {
       .select(col("r"), col("c"), col("own_cls"), col("n_nbr"),
         when(col("m.neg") * -2 > col("n_nbr"), col("m.cls"))
           .otherwise(col("own_cls")).as("out_cls"))
-  }
+
+  /** The 3×3 offsets tagged 1 on the SELF leg (GIS10, GIS25). */
+  private val selfTagged: Seq[(Long, Long, Int)] = Grid.offs3x3.map {
+    case (dr, dc) => (dr, dc, if (dr == 0L && dc == 0L) 1 else 0) }
 
   /** GIS11 — COST DISTANCE (Esri Cost Distance, the Spatial Analyst
     * accumulated-travel-cost tool) from the class-4 source cells over
@@ -666,38 +632,51 @@ object WroQueries {
     costDistanceFrom(classedGrid(spark, dir), k)
 
   /** Cost-distance core over a classed sparse grid (r, c, cls) with
-    * class-`seedCls` sources, exposed for the barrier/metric spec. */
-  private[ops] def costDistanceFrom(classed: DataFrame, k: Int,
-                                    seedCls: Int = 4): DataFrame = {
-    // the SELF offset (0,0, weight 0) folds "keep the current
-    // estimate" into the same fan-out as the 8 neighbor extensions,
-    // so each round is min over ONE generator — no union referencing
-    // `best` twice, hence no doubling subtree, hence NO per-round
-    // checkpoint: the k rounds are one linear lineage Spark runs as a
-    // SINGLE job (one reused broadcast of the present-cell domain,
-    // k chained partial-agg shuffles AQE coalesces to the data),
-    // instead of k checkpoint jobs each paying scheduling + a fresh
-    // broadcast. Measured 4.1 s → ~1.5 s at sf0.1 for the same rows.
-    val offs = for { dr <- -1L to 1L; dc <- -1L to 1L }
-      yield (dr, dc, if (dr == 0L && dc == 0L) 0L
-                     else if (dr == 0L || dc == 0L) 3L else 4L)
+    * class-4 sources, exposed for the barrier/metric spec. */
+  private[ops] def costDistanceFrom(classed: DataFrame, k: Int): DataFrame =
+    chamferRelax(classed, k, Seq(4)).withColumnRenamed("d", "cost34")
+
+  /** The k-round chamfer 3-4 relaxation behind GIS11, GIS12 and GIS27,
+    * over a classed sparse grid (r, c, cls) from its class-`seeds`
+    * cells: each round extends every estimate `d` by one
+    * [[Grid.chamferOffs]] step (weight × `scale`), keeps in-grid PRESENT
+    * targets (broadcast semi of the ≤10k-cell domain) and folds min per
+    * cell. `bySeed` carries the source class as `seed` in the key, so
+    * every seed class gets its own field in one lineage. A `scale` ≥
+    * [[Grid.Cells]] starts `d` at the source's packed key, so d =
+    * cost·scale + src and min() breaks cost ties to the smaller source.
+    * Emits (r, c[, seed], d).
+    *
+    * The SELF offset (0,0, weight 0) folds "keep the current estimate"
+    * into the same fan-out as the 8 neighbor extensions, so each round
+    * is min over ONE generator — no union referencing `best` twice,
+    * hence no doubling subtree, hence NO per-round checkpoint: the k
+    * rounds are one linear lineage Spark runs as a SINGLE job (one
+    * reused broadcast of the present-cell domain, k chained partial-agg
+    * shuffles), instead of k checkpoint jobs each paying scheduling + a
+    * fresh broadcast. Measured 4.1 s → ~1.5 s at sf0.1 for the same
+    * rows. */
+  private def chamferRelax(classed: DataFrame, k: Int, seeds: Seq[Int],
+      bySeed: Boolean = false, scale: Long = 1L): DataFrame = {
+    val (seed0, seed) =
+      if (bySeed) (Seq(col("cls").as("seed")), Seq(col("seed"))) else (Nil, Nil)
+    val (d0, step) =
+      if (scale == 1L) (lit(0L), col("o._3"))
+      else (Grid.pack(col("r"), col("c")), col("o._3") * scale)
     val cells = classed.localCheckpoint()
     val present = cells.select("r", "c")
-    var best = cells.filter(col("cls") === seedCls)
-      .select(col("r"), col("c"), lit(0L).as("d"))
+    var best = cells.filter(seeds.map(col("cls") === _).reduce(_ || _))
+      .select(Seq(col("r"), col("c")) ++ seed0 :+ d0.as("d"): _*)
     for (_ <- 1 to k) {
-      best = best
-        .select(col("r"), col("c"), col("d"), explode(typedLit(offs)).as("o"))
-        .select((col("r") + col("o._1")).as("r"),
-          (col("c") + col("o._2")).as("c"), (col("d") + col("o._3")).as("d"))
-        .filter(col("r").between(0, GridW - 1) &&
-          col("c").between(0, GridW - 1))
+      best = Grid.fanOut(best, Grid.chamferOffs, seed :+ col("d"): _*)(
+          seed :+ (col("d") + step).as("d"): _*)
+        .filter(Grid.inGrid)
         .join(broadcast(present), Seq("r", "c"), "left_semi")
-        .groupBy("r", "c").agg(min("d").as("d"))
+        .groupBy(Seq(col("r"), col("c")) ++ seed: _*).agg(min("d").as("d"))
     }
     withConfs(classed.sparkSession, relaxConfs) {
       best.localCheckpoint()
-    }.withColumnRenamed("d", "cost34")
+    }
   }
 
   /** Confs the domain-bounded relaxations materialize under: AQE OFF
@@ -705,7 +684,7 @@ object WroQueries {
     * submitted as its OWN job (~150-200 ms scheduling each, measured)
     * while the stages carry ≤10k rows, so there is nothing to adapt
     * and the whole k-round lineage can run as ONE job — and shuffle
-    * partitions sized to the RASTER DOMAIN (≤GridW² rows by
+    * partitions sized to the RASTER DOMAIN (≤Grid.Cells rows by
     * construction at ANY scale factor), not the session's data-scale
     * default of 32: the k tiny stages otherwise pay k×32 empty-task
     * launches. Data-sized like [[aqeSkewConfs]], scoped to the
@@ -728,7 +707,7 @@ object WroQueries {
     * reachable cell has one); the walk itself is a SINGLE-ROW pointer
     * chase, so it runs where a ≤⌈4k/3⌉-step sequential chase belongs:
     * on the driver, over the pred table collected ONCE (bounded by
-    * the ≤GridW² raster domain at ANY scale factor — the documented
+    * the ≤10k-cell raster domain at ANY scale factor — the documented
     * bounded-collect boundary, like Bpe's ≤topM rows; the cost FIELD
     * and the pred FUNCTION stay distributed). The former
     * formulation — one Spark join of a one-row frontier per step —
@@ -745,8 +724,7 @@ object WroQueries {
     * complete. */
   def leastCostPath(spark: SparkSession, dir: String, k: Int = 10)
       : DataFrame = {
-    val offs = for { dr <- -1L to 1L; dc <- -1L to 1L; if dr != 0 || dc != 0 }
-      yield (dr, dc, if (dr == 0L || dc == 0L) 3L else 4L)
+    val offs = Grid.chamferOffs.filter(_._3 > 0L)   // the 8 neighbors
     val cost = costDistance(spark, dir, k)
     val pred = withConfs(spark, relaxConfs) {
       cost
@@ -758,12 +736,13 @@ object WroQueries {
         .join(broadcast(cost), Seq("r", "c"))
         .filter(col("yd") + col("w") === col("cost34"))
         .groupBy("r", "c")
-        .agg(min(col("yd") * 10000 + col("yr") * 100 + col("yc")).as("pk"))
-        .select(col("r"), col("c"), expr("(pk % 10000) div 100").as("pr"),
-          (col("pk") % 100).as("pc"))
+        .agg(min(col("yd") * Grid.Cells + col("yr") * Grid.W + col("yc"))
+          .as("pk"))
+        .select(col("r"), col("c"), Grid.row(Grid.cellOf(col("pk"))).as("pr"),
+          Grid.col(col("pk")).as("pc"))
         .localCheckpoint()
     }
-    // both collects are bounded by the raster domain (≤GridW² rows)
+    // both collects are bounded by the raster domain (≤Grid.Cells rows)
     val costOf: Map[(Long, Long), Long] = cost.collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     val predOf: Map[(Long, Long), (Long, Long)] = pred.collect()
@@ -775,7 +754,7 @@ object WroQueries {
     val dest = costOf.keysIterator.reduce { (a, b) =>
       val (da, db) = (costOf(a), costOf(b))
       if (da > db || (da == db &&
-        a._1 * 100 + a._2 < b._1 * 100 + b._2)) a else b
+        Grid.pack(a._1, a._2) < Grid.pack(b._1, b._2))) a else b
     }
     // a converged field bounds cost34 by 4k but each backtrace step
     // drops it by only >=3 (orthogonal chamfer weight), so a valid
@@ -813,37 +792,11 @@ object WroQueries {
   def allocation(spark: SparkSession, dir: String, k: Int = 10): DataFrame =
     allocationFrom(classedGrid(spark, dir), k)
 
-  private[ops] def allocationFrom(classed: DataFrame, k: Int): DataFrame = {
-    // same single-lineage relaxation as [[costDistanceFrom]]: the
-    // weight-0 self offset subsumes the union, so the k rounds run as
-    // one job with no per-round checkpoints.
-    val offs = for { dr <- -1L to 1L; dc <- -1L to 1L }
-      yield (dr, dc, if (dr == 0L && dc == 0L) 0L
-                     else if (dr == 0L || dc == 0L) 3L else 4L)
-    val cells = classed.localCheckpoint()
-    val present = cells.select("r", "c")
-    var best = cells.filter(col("cls") === 4)
-      .select(col("r"), col("c"),
-        (col("r") * 100 + col("c")).as("key"))   // d = 0, packed = src
-    for (_ <- 1 to k) {
-      best = best
-        .select(col("r"), col("c"), col("key"),
-          explode(typedLit(offs)).as("o"))
-        .select((col("r") + col("o._1")).as("r"),
-          (col("c") + col("o._2")).as("c"),
-          (col("key") + col("o._3") * 10000L).as("key"))
-        .filter(col("r").between(0, GridW - 1) &&
-          col("c").between(0, GridW - 1))
-        .join(broadcast(present), Seq("r", "c"), "left_semi")
-        .groupBy("r", "c").agg(min("key").as("key"))
-    }
-    best = withConfs(classed.sparkSession, relaxConfs) {
-      best.localCheckpoint()
-    }
-    best.select(col("r"), col("c"), expr("key div 10000").as("cost34"),
-      expr("(key % 10000) div 100").as("src_r"),
-      (col("key") % 100).as("src_c"))
-  }
+  private[ops] def allocationFrom(classed: DataFrame, k: Int): DataFrame =
+    chamferRelax(classed, k, Seq(4), scale = Grid.Cells)
+      .select(col("r"), col("c"), Grid.div(col("d"), Grid.Cells).as("cost34"),
+        Grid.row(Grid.cellOf(col("d"))).as("src_r"),
+        Grid.col(col("d")).as("src_c"))
 
   /** GIS27 — CORRIDOR (Esri Corridor, Distance toolset: the SUM of two
     * accumulated-cost surfaces — every cell's value is the total cost
@@ -854,53 +807,26 @@ object WroQueries {
     * Only cells reachable from BOTH source sets within k rounds emit
     * (the inner join IS the reachability intersection — Esri's NoData
     * propagation for corridor); the threshold cut is the caller's
-    * post-filter, so the full sum surface ships. Two proven subplans
-    * + one co-partitioned join; at 100 TB each field is the GIS11
-    * frontier relaxation and the join inherits their layout. */
-  def corridor(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
-    val classed = classedGrid(spark, dir)
-    // ONE FUSED relaxation for BOTH source sets (r12): the two per-seed
+    * post-filter, so the full sum surface ships. Both fields come from
+    * ONE GIS11 relaxation keyed by seed class, then one pivot
+    * aggregate. */
+  def corridor(spark: SparkSession, dir: String, k: Int = 10): DataFrame =
+    // ONE FUSED relaxation for BOTH source sets: the two per-seed
     // recurrences never interact, so carrying the seed class in the
     // aggregation key computes both cost fields in a single k-round
     // lineage — one materialization job instead of two, one broadcast
     // of the present-cell domain instead of two, and the final
-    // co-partitioned join collapses into a pivot aggregate (2
-    // checkpointed inputs + join exchange → 1 groupBy). Per-round row
-    // count is |frontier_4| + |frontier_0| — the same total rows the
-    // two separate lineages carried. Result-identical by construction:
-    // min-fold per (cell, seed) is exactly costDistanceFrom's
-    // recurrence per seed, and the non-null filter reproduces the
-    // inner join's both-reachable semantics (oracle unchanged,
-    // re-verified exact).
-    val offs = for { dr <- -1L to 1L; dc <- -1L to 1L }
-      yield (dr, dc, if (dr == 0L && dc == 0L) 0L
-                     else if (dr == 0L || dc == 0L) 3L else 4L)
-    val cells = classed.localCheckpoint()
-    val present = cells.select("r", "c")
-    var best = cells.filter(col("cls") === 4 || col("cls") === 0)
-      .select(col("r"), col("c"), col("cls").as("seed"), lit(0L).as("d"))
-    for (_ <- 1 to k) {
-      best = best
-        .select(col("r"), col("c"), col("seed"), col("d"),
-          explode(typedLit(offs)).as("o"))
-        .select((col("r") + col("o._1")).as("r"),
-          (col("c") + col("o._2")).as("c"), col("seed"),
-          (col("d") + col("o._3")).as("d"))
-        .filter(col("r").between(0, GridW - 1) &&
-          col("c").between(0, GridW - 1))
-        .join(broadcast(present), Seq("r", "c"), "left_semi")
-        .groupBy("r", "c", "seed").agg(min("d").as("d"))
-    }
-    val both = withConfs(spark, relaxConfs) {
-      best.localCheckpoint()
-    }
-    both.groupBy("r", "c")
+    // co-partitioned join collapses into a pivot aggregate. Per-round
+    // row count is |frontier_4| + |frontier_0| — the same total rows
+    // two separate lineages would carry. The non-null filter
+    // reproduces the inner join's both-reachable semantics.
+    chamferRelax(classedGrid(spark, dir), k, Seq(4, 0), bySeed = true)
+      .groupBy("r", "c")
       .agg(min(when(col("seed") === 4, col("d"))).as("cost_a"),
            min(when(col("seed") === 0, col("d"))).as("cost_b"))
       .filter(col("cost_a").isNotNull && col("cost_b").isNotNull)
       .select(col("r"), col("c"), col("cost_a"), col("cost_b"),
         (col("cost_a") + col("cost_b")).as("total34"))
-  }
 
   /** GIS15 — CURVATURE (Esri Curvature / Zevenbergen-Thorne 1987 —
     * the second-derivative Surface op; slope is the first): per
@@ -919,7 +845,7 @@ object WroQueries {
     // weights the TARGET sees from a source at offset (−dr, −dc):
     // wx: E/W neighbors +1, center −2 | wy: N/S +1, center −2
     // wxy: corners −(−1)^... : NW/SE −1, NE/SW +1
-    val offs = for { dr <- -1L to 1L; dc <- -1L to 1L } yield {
+    val offs = Grid.offs3x3.map { case (dr, dc) =>
       val (nr, nc) = (-dr, -dc)
       val wx = if (nr == 0L && nc != 0L) 1L
                else if (nr == 0L && nc == 0L) -2L else 0L
@@ -928,16 +854,11 @@ object WroQueries {
       val wxy = if (nr != 0L && nc != 0L) -nr * nc else 0L
       (dr, dc, wx, wy, wxy)
     }
-    perCell(spark, dir)
-      .select(expr("cell_id div 100").as("r"), (col("cell_id") % GridW).as("c"),
-        (col("quantity").cast("decimal(18,2)") * 100).cast("long").as("cents"))
-      .select(col("r"), col("c"), col("cents"),
-        explode(typedLit(offs)).as("o"))
-      .select((col("r") + col("o._1")).as("r"), (col("c") + col("o._2")).as("c"),
+    Grid.fanOut(centsGrid(spark, dir), offs, col("cents"))(
         (col("cents") * col("o._3")).as("xc"),
         (col("cents") * col("o._4")).as("yc"),
         (col("cents") * col("o._5")).as("xyc"))
-      .filter(col("r").between(0, GridW - 1) && col("c").between(0, GridW - 1))
+      .filter(Grid.inGrid)
       .groupBy("r", "c")
       .agg(sum("xc").as("d2x"), sum("yc").as("d2y"),
         sum("xyc").as("dxy4"), count(lit(1)).as("n"))
@@ -964,10 +885,7 @@ object WroQueries {
     * documented sparse-raster contract (Esri interpolates; classes
     * must not be, pyt:25/606/823). One exchange: the ray window. */
   def viewshed(spark: SparkSession, dir: String): DataFrame = {
-    val cells = perCell(spark, dir)
-      .select(expr("cell_id div 100").as("r"), (col("cell_id") % GridW).as("c"),
-        (col("quantity").cast("decimal(18,2)") * 100).cast("long").as("cents"))
-      .cache()
+    val cells = centsGrid(spark, dir).cache()
     val obs = cells.filter(col("r") === 50 && col("c") === 50)
       .select(col("cents").as("z0"))
     val gExpr = expr("""array_max(filter(sequence(1, 99),
@@ -1007,33 +925,40 @@ object WroQueries {
     * the SAME 16 steps linearly — next^16 computed two different
     * ways must agree cell-for-cell. */
   def watershed(spark: SparkSession, dir: String, doublings: Int = 4)
-      : DataFrame = {
-    val code2dr = expr("""CASE d8 WHEN 1 THEN 0 WHEN 2 THEN 1 WHEN 4 THEN 1
-      WHEN 8 THEN 1 WHEN 16 THEN 0 WHEN 32 THEN -1 WHEN 64 THEN -1
-      ELSE -1 END""")
-    val code2dc = expr("""CASE d8 WHEN 1 THEN 1 WHEN 2 THEN 1 WHEN 4 THEN 0
-      WHEN 8 THEN -1 WHEN 16 THEN -1 WHEN 32 THEN -1 WHEN 64 THEN 0
-      ELSE 1 END""")
-    val e = flowDirection(spark, dir)
-      .select((col("r") * 100 + col("c")).as("u"),
-        ((col("r") + code2dr) * 100 + (col("c") + code2dc)).as("v"))
-    val cells = perCell(spark, dir)
-      .select((expr("cell_id div 100") * 100 + col("cell_id") % 100)
-        .as("u"))
-    var p = cells.join(e, Seq("u"), "left")
-      .select(col("u"), coalesce(col("v"), col("u")).as("v"))
+      : DataFrame =
+    d8Doubling(spark, dir, doublings, payload = None)
+      .select(Grid.rc(col("u")) ++ Seq(Grid.row(col("v")).as("ws_r"),
+        Grid.col(col("v")).as("ws_c")): _*)
+
+  /** next^(2^doublings) over the D8 pointers by POINTER DOUBLING (GIS14,
+    * GIS28): p₀ = next with SINKS — cells with no D8 code — made
+    * self-loops, then each round squares p. With a `payload` (an
+    * additive per-edge weight over the code `d8`) each pointer also
+    * carries `d`, the payload summed along it,
+    *   p²(u) = (p(p(u).v).v, p(u).d + p(p(u).v).d),
+    * with sinks at d = 0 (absorbing, so the sum stops growing at the
+    * outlet). Emits (u, v[, d]) for the cells whose target is a sink. */
+  private def d8Doubling(spark: SparkSession, dir: String, doublings: Int,
+                         payload: Option[Column]): DataFrame = {
+    def withD(c: => Column): Seq[Column] = payload.map(_ => c).toSeq
+    val e = d8Edges(spark, dir, payload.map(_.as("d")).toSeq: _*)
+    var p = perCell(spark, dir).select(col("cell_id").as("u"))
+      .join(e, Seq("u"), "left")
+      .select(Seq(col("u"), coalesce(col("v"), col("u")).as("v")) ++
+        withD(coalesce(col("d"), lit(0L)).as("d")): _*)
       .localCheckpoint()
     val sinks = p.filter(col("u") === col("v")).select(col("u").as("s"))
       .localCheckpoint()
     // doubling loop under relaxConfs (raster-domain bounded, the
-    // costDistanceFrom discipline): each squaring checkpoint becomes
+    // chamferRelax discipline): each squaring checkpoint becomes
     // one job at domain-sized partitions. The initial pointer-table
     // checkpoint above stays outside — it joins the fact-scale scan.
     withConfs(spark, relaxConfs) {
       for (_ <- 1 to doublings) {
-        p = p.join(p.select(col("u").as("m"), col("v").as("w")),
-            col("v") === col("m"))
-          .select(col("u"), col("w").as("v"))
+        p = p.join(p.select(Seq(col("u").as("m"), col("v").as("w")) ++
+            withD(col("d").as("d2")): _*), col("v") === col("m"))
+          .select(Seq(col("u"), col("w").as("v")) ++
+            withD((col("d") + col("d2")).as("d")): _*)
           .localCheckpoint()
       }
       p
@@ -1041,8 +966,6 @@ object WroQueries {
     // the sink set is boundary-sized (≤ the raster frontier) —
     // broadcast it so the final label filter never exchanges
     p.join(broadcast(sinks), col("v") === col("s"), "left_semi")
-      .select(expr("u div 100").as("r"), (col("u") % 100).as("c"),
-        expr("v div 100").as("ws_r"), (col("v") % 100).as("ws_c"))
   }
 
   /** GIS28 — FLOW LENGTH (Esri Flow Length, downstream: the
@@ -1061,41 +984,10 @@ object WroQueries {
     * SAME 16 steps LINEARLY, accumulating — sum-over-path computed
     * two structurally different ways must agree cell-for-cell. */
   def flowLength(spark: SparkSession, dir: String, doublings: Int = 4)
-      : DataFrame = {
-    val code2dr = expr("""CASE d8 WHEN 1 THEN 0 WHEN 2 THEN 1 WHEN 4 THEN 1
-      WHEN 8 THEN 1 WHEN 16 THEN 0 WHEN 32 THEN -1 WHEN 64 THEN -1
-      ELSE -1 END""")
-    val code2dc = expr("""CASE d8 WHEN 1 THEN 1 WHEN 2 THEN 1 WHEN 4 THEN 0
-      WHEN 8 THEN -1 WHEN 16 THEN -1 WHEN 32 THEN -1 WHEN 64 THEN 0
-      ELSE 1 END""")
-    val stepW = expr("""CASE WHEN d8 IN (1, 4, 16, 64) THEN 3 ELSE 4 END""")
-    val e = flowDirection(spark, dir)
-      .select((col("r") * 100 + col("c")).as("u"),
-        ((col("r") + code2dr) * 100 + (col("c") + code2dc)).as("v"),
-        stepW.cast("long").as("d"))
-    val cells = perCell(spark, dir)
-      .select((expr("cell_id div 100") * 100 + col("cell_id") % 100)
-        .as("u"))
-    var p = cells.join(e, Seq("u"), "left")
-      .select(col("u"), coalesce(col("v"), col("u")).as("v"),
-        coalesce(col("d"), lit(0L)).as("d"))
-      .localCheckpoint()
-    val sinks = p.filter(col("u") === col("v")).select(col("u").as("s"))
-      .localCheckpoint()
-    // doubling loop under relaxConfs — same rationale as [[watershed]].
-    withConfs(spark, relaxConfs) {
-      for (_ <- 1 to doublings) {
-        p = p.join(p.select(col("u").as("m"), col("v").as("w"),
-            col("d").as("d2")), col("v") === col("m"))
-          .select(col("u"), col("w").as("v"), (col("d") + col("d2")).as("d"))
-          .localCheckpoint()
-      }
-      p
-    }
-    p.join(broadcast(sinks), col("v") === col("s"), "left_semi")
-      .select(expr("u div 100").as("r"), (col("u") % 100).as("c"),
-        col("d").as("len34"))
-  }
+      : DataFrame =
+    d8Doubling(spark, dir, doublings,
+        Some(Grid.d8Chamfer(col("d8")).cast("long")))
+      .select(Grid.rc(col("u")) :+ col("d").as("len34"): _*)
 
   /** GIS7 — POLYGON zonal statistics (Esri Zonal Statistics with
     * FEATURE zones — GIS2's zones were raster classes; real zone data
@@ -1136,8 +1028,8 @@ object WroQueries {
         expr("transform(vs0, p -> struct(p._1 AS x, p._2 AS y))").as("vs"),
         col("x_lo"), col("x_hi"), col("y_lo"), col("y_hi"))
     val cells = perCell(spark, dir)
-      .select((col("cell_id") % GridW).as("px"),
-        expr("cell_id div 100").as("py"),
+      .select(Grid.col(col("cell_id")).as("px"),
+        Grid.row(col("cell_id")).as("py"),
         (col("quantity").cast("decimal(18,2)") * 100).cast("long").as("cents"))
     val crossings = expr("""
       aggregate(sequence(1, size(vs)), 0, (acc, i) -> acc + (
@@ -1184,8 +1076,8 @@ object WroQueries {
     // cached: the bounded ≤10k-cell aggregate feeds both the stats leg
     // and the classing leg (the zonal multi-leg policy)
     val cs = perCell(spark, dir)
-      .select(expr("cell_id div 100").as("r"), (col("cell_id") % GridW).as("c"),
-        col("quantity").cast("double").as("q"))
+      .select(Grid.rc(col("cell_id")) :+
+        col("quantity").cast("double").as("q"): _*)
       .cache()
     val stats = cs.agg(min("q").as("mn"), max("q").as("mx"))
     val classed = cs.crossJoin(broadcast(stats))
@@ -1195,11 +1087,9 @@ object WroQueries {
           .cast("int").as("cls"))
     val offs = Seq((0L, 0L, 1), (-1L, 0L, 0), (1L, 0L, 0),
       (0L, -1L, 0), (0L, 1L, 0))
-    classed.select(col("r"), col("c"), col("cls"),
-        explode(typedLit(offs)).as("o"))
-      .select((col("r") + col("o._1")).as("r"), (col("c") + col("o._2")).as("c"),
+    Grid.fanOut(classed, offs, col("cls"))(
         col("cls"), col("o._3").as("is_self"))
-      .filter(col("r").between(0, GridW - 1) && col("c").between(0, GridW - 1))
+      .filter(Grid.inGrid)
       .groupBy("r", "c")
       .agg(max(col("is_self")).as("self_present"),
            min(when(col("is_self") === 1, col("cls"))).as("own_cls"),
@@ -1260,9 +1150,9 @@ object WroQueries {
         ((col(s"mx_$name") - col(s"mn_$name")) / lit(5.0))), lit(4))
         .cast("int")
     val classed = pc.crossJoin(broadcast(stats))
-      .select(expr("cell_id div 100").as("r"), (col("cell_id") % GridW).as("c"),
+      .select(Grid.rc(col("cell_id")) ++ Seq(
         cls("quantity").as("cq"), cls("extendedprice").as("cp"),
-        cls("discount").as("cd"))
+        cls("discount").as("cd")): _*)
     val combos = classed.groupBy("cq", "cp", "cd")
       .agg(count(lit(1)).as("combo_n"))
       .withColumn("combo_id", dense_rank().over(
@@ -1282,14 +1172,10 @@ object WroQueries {
     * riding the same rows (the GIS10 shape): max(is4) over
     * contributions is the any-predicate, no pairwise comparison
     * materializes. */
-  def expand(spark: SparkSession, dir: String): DataFrame = {
-    val offs = for { dr <- -1L to 1L; dc <- -1L to 1L }
-      yield (dr, dc, if (dr == 0L && dc == 0L) 1 else 0)
-    classedGrid(spark, dir)
-      .select(col("r"), col("c"), col("cls"), explode(typedLit(offs)).as("o"))
-      .select((col("r") + col("o._1")).as("r"), (col("c") + col("o._2")).as("c"),
+  def expand(spark: SparkSession, dir: String): DataFrame =
+    Grid.fanOut(classedGrid(spark, dir), selfTagged, col("cls"))(
         col("cls"), col("o._3").as("self"))
-      .filter(col("r").between(0, GridW - 1) && col("c").between(0, GridW - 1))
+      .filter(Grid.inGrid)
       .groupBy("r", "c")
       .agg(max(when(col("self") === 1, col("cls"))).as("own_cls"),
         max(when(col("cls") === 4, 1).otherwise(0)).as("any4"),
@@ -1298,7 +1184,6 @@ object WroQueries {
       .select(col("r"), col("c"), col("own_cls"),
         when(col("any4") === 1, lit(4)).otherwise(col("own_cls"))
           .as("out_cls"))
-  }
 
   /** GIS26 — ZONAL GEOMETRY (Esri Zonal Geometry: area, centroid,
     * extent per zone) over GIS17's converged regions — the proof that
@@ -1323,9 +1208,8 @@ object WroQueries {
     * BIGINT losslessly and every downstream moment/deviation product
     * stays in exact int64 range (bounds documented per operator). */
   private def unitsGrid(spark: SparkSession, dir: String): DataFrame =
-    perCell(spark, dir)
-      .select(expr("cell_id div 100").as("r"), (col("cell_id") % GridW).as("c"),
-        col("quantity").cast("long").as("u"))
+    perCell(spark, dir).select(Grid.rc(col("cell_id")) :+
+      col("quantity").cast("long").as("u"): _*)
 
   /** GIS18 — global MORAN'S I components (the spatial-autocorrelation
     * statistic; Esri Spatial Autocorrelation / Global Moran's I tool):
@@ -1340,8 +1224,9 @@ object WroQueries {
     * directed rook pairs ≤ 10¹⁶ — int64-safe. Shape: one broadcast of
     * the 1-row moment table, one 4-offset fan-out joined back to the
     * deviation grid (raster-domain bounded), three scalar aggregates.
-    * At 100 TB the pair join is a tiled halo exchange; nothing is
-    * all-pairs — W is linear in cells, not quadratic. */
+    * Nothing is all-pairs — W is linear in cells, not quadratic; a
+    * tiled halo exchange for the pair join is ROADMAP item 4's later
+    * step (not built). */
   def moran(spark: SparkSession, dir: String): DataFrame = {
     val g = unitsGrid(spark, dir).cache()
     val t = g.agg(count(lit(1)).as("n"), sum("u").as("s"))
@@ -1350,11 +1235,7 @@ object WroQueries {
         (col("n") * col("u") - col("s")).as("dev"), col("n"))
       .localCheckpoint()
     val offs = Seq((0L, 1L), (0L, -1L), (1L, 0L), (-1L, 0L))
-    val pairs = d
-      .select(col("r"), col("c"), col("dev").as("da"),
-        explode(typedLit(offs)).as("o"))
-      .select((col("r") + col("o._1")).as("r"),
-        (col("c") + col("o._2")).as("c"), col("da"))
+    val pairs = Grid.fanOut(d, offs, col("dev").as("da"))(col("da"))
       .join(d.select(col("r"), col("c"), col("dev").as("db")), Seq("r", "c"))
       .agg(count(lit(1)).as("w_pairs"), sum(col("da") * col("db")).as("num"))
     val den = d.agg(sum(col("dev") * col("dev")).as("den"))
@@ -1376,18 +1257,15 @@ object WroQueries {
     * all BIGINT (num² ≤ 2.1·10¹³, ×(N−1) ≤ 2.1·10¹⁷; rhs ≤ 2·10¹⁷ at
     * k=3 — int64-safe), identical arithmetic in the oracle. Shape: the
     * GIS1 contribute-to-neighbors fan-out for the focal sum (3×3, self
-    * included), one broadcast 1-row moment table, one projection. At
-    * 100 TB: tiled halo exchange, raster-domain bounded. */
+    * included), one broadcast 1-row moment table, one projection,
+    * raster-domain bounded; the tiled halo exchange is ROADMAP item 4's
+    * later step (not built). */
   def giStar(spark: SparkSession, dir: String): DataFrame = {
     val g = unitsGrid(spark, dir).cache()
     val t = g.agg(count(lit(1)).as("n"), sum("u").as("s"),
       sum(col("u") * col("u")).as("ss"))
-    val offs = for { dr <- -1L to 1L; dc <- -1L to 1L } yield (dr, dc)
-    val focal = g
-      .select(col("r"), col("c"), col("u"), explode(typedLit(offs)).as("o"))
-      .select((col("r") + col("o._1")).as("r"),
-        (col("c") + col("o._2")).as("c"), col("u"))
-      .filter(col("r").between(0, GridW - 1) && col("c").between(0, GridW - 1))
+    val focal = Grid.fanOut(g, Grid.offs3x3, col("u"))(col("u"))
+      .filter(Grid.inGrid)
       .groupBy("r", "c")
       .agg(sum("u").as("local"), count(lit(1)).as("nk"))
       // only PRESENT cells get a Gi* (semi join against the cached grid)
@@ -1419,19 +1297,12 @@ object WroQueries {
     * (raster-domain bounded), one anti-join against the present set
     * keeps interpolation strictly on NoData ground, one aggregate. */
   def idw(spark: SparkSession, dir: String): DataFrame = {
-    val g = perCell(spark, dir)
-      .select(expr("cell_id div 100").as("r"), (col("cell_id") % GridW).as("c"),
-        (col("quantity").cast("decimal(18,2)") * 100).cast("long").as("cents"))
-      .cache()
-    val offs = for {
-      dr <- -2L to 2L; dc <- -2L to 2L; if dr != 0 || dc != 0
-    } yield (dr, dc, 40L / (dr * dr + dc * dc))
-    g.select(col("r"), col("c"), col("cents"),
-        explode(typedLit(offs)).as("o"))
-      .select((col("r") + col("o._1")).as("r"),
-        (col("c") + col("o._2")).as("c"),
+    val g = centsGrid(spark, dir).cache()
+    val offs = Grid.window(2L).filter(_ != ((0L, 0L))).map {
+      case (dr, dc) => (dr, dc, 40L / (dr * dr + dc * dc)) }
+    Grid.fanOut(g, offs, col("cents"))(
         (col("cents") * col("o._3")).as("wc"), col("o._3").as("w"))
-      .filter(col("r").between(0, GridW - 1) && col("c").between(0, GridW - 1))
+      .filter(Grid.inGrid)
       .join(g.select("r", "c"), Seq("r", "c"), "left_anti")
       .groupBy("r", "c")
       .agg(sum("wc").as("num40"), sum("w").as("den40"))
@@ -1456,9 +1327,7 @@ object WroQueries {
     // (3−2i)·(3−2j) sixteenths
     val roles = for { i <- 0L to 1L; j <- 0L to 1L }
       yield (i, j, (3 - 2 * i) * (3 - 2 * j))
-    perCell(spark, dir)
-      .select(expr("cell_id div 100").as("r"), (col("cell_id") % GridW).as("c"),
-        (col("quantity").cast("decimal(18,2)") * 100).cast("long").as("cents"))
+    centsGrid(spark, dir)
       .select(col("r"), col("c"), col("cents"),
         explode(typedLit(roles)).as("o"))
       .filter((col("r") - 1 - col("o._1")) % 4 === 0 &&
@@ -1498,16 +1367,13 @@ object WroQueries {
   def regionGroup(spark: SparkSession, dir: String): DataFrame = {
     val g = unitsGrid(spark, dir)
       .select(col("r"), col("c"), (col("u") % 7).as("cls"),
-        (col("r") * 100 + col("c")).as("k"))
+        Grid.pack(col("r"), col("c")).as("k"))
       .localCheckpoint()
     // undirected-once edges: each cell pairs with its E and S same-class
     // neighbors (covers all rook adjacencies exactly once)
     val offs = Seq((0L, 1L), (1L, 0L))
-    val edges = g
-      .select(col("r"), col("c"), col("cls").as("cls_a"), col("k").as("ka"),
-        explode(typedLit(offs)).as("o"))
-      .select((col("r") + col("o._1")).as("r"),
-        (col("c") + col("o._2")).as("c"), col("cls_a"), col("ka"))
+    val edges = Grid.fanOut(g, offs, col("cls").as("cls_a"), col("k").as("ka"))(
+        col("cls_a"), col("ka"))
       .join(g.select(col("r"), col("c"), col("cls").as("cls_b"),
         col("k").as("kb")), Seq("r", "c"))
       .filter(col("cls_a") === col("cls_b"))
@@ -1517,7 +1383,7 @@ object WroQueries {
       .select(col("r"), col("c"), col("cls"),
         coalesce(col("cluster_id"), col("k")).as("reg"))
       .select(col("r"), col("c"), col("cls"),
-        expr("reg div 100").as("reg_r"), (col("reg") % 100).as("reg_c"))
+        Grid.row(col("reg")).as("reg_r"), Grid.col(col("reg")).as("reg_c"))
   }
 
   /** R2 (pyt:710-745): the layer-filter chain — keep rasters, optionally
@@ -1752,7 +1618,7 @@ object WroQueries {
        |  FROM lineitem GROUP BY 1),
        |g AS (SELECT cell_id // 100 AS r, cell_id % 100 AS c, cents FROM pc),
        |o(dr, dc, code, w) AS (VALUES
-       |  ${d8Offs.map { case (dr, dc, code, wt) =>
+       |  ${Grid.d8Offs.map { case (dr, dc, code, wt) =>
             s"($dr, $dc, $code, $wt)" }.mkString(",\n  ")}),
        |n AS (SELECT g.r + o.dr AS r, g.c + o.dc AS c, g.cents AS nb,
        |        o.code, o.w

@@ -4,11 +4,11 @@ import graft.SparkSpec
 import graft.llm.TextAnalysis
 import org.apache.spark.sql.functions._
 
-/** Differential tests for the round-9 relational/LLM gates: each is
-  * checked against an INDEPENDENT second computation — Spark's native
-  * interpolated percentile for a27, a driver-side brute-force md5
-  * recount for d39. */
-class Round9QueriesSpec extends SparkSpec {
+/** Differential recounts: each query is checked against an INDEPENDENT
+  * second computation — Spark's native interpolated percentile for a27,
+  * driver-side brute-force recounts for o10, twi, d41 and the
+  * least-cost path, a brute-force md5 recount for d39. */
+class DifferentialRecountSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
